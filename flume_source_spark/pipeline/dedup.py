@@ -400,7 +400,29 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     only computes its own signatures and joins in. Oracle: the exact
     shingle join restricted to increment × corpus pairs — on this
     corpus LSH equals exact (same probability argument as
-    ``dedup_minhash_lsh``)."""
+    ``dedup_minhash_lsh``).
+
+    The result is candidate-sized, so it is materialized eagerly and
+    the two caches released (the same unpersist-after-checkpoint
+    discipline as ``dedup_minhash_lsh``; otherwise each call leaks
+    them)."""
+    lazy, docs, cand = _incremental_lsh_lazy(spark, sf_dir)
+    try:
+        out = lazy.localCheckpoint(eager=True)
+    finally:
+        # release even when the checkpoint job fails mid-flight — a
+        # retrying session would otherwise accumulate leaked caches
+        docs.unpersist(blocking=False)
+        cand.unpersist(blocking=False)
+    return out
+
+
+def _incremental_lsh_lazy(spark: SparkSession, sf_dir: str):
+    """The un-checkpointed verified-pair plan plus its two persisted
+    frames (``docs``, ``cand``) — factored (the _knn_blocked_lazy
+    pattern) so plan-shape tests can inspect the REAL band and verify
+    joins; the public builder checkpoints, which collapses the executed
+    plan to a Scan ExistingRDD. The caller unpersists both frames."""
     d = spread(load_tables(spark, sf_dir)["documents"])
     docs = d.select("doc_id", shingle_col(F.col("text")).alias("shingles")).persist()
     inc = docs.filter(F.col("doc_id") % 10 == 0)
@@ -436,14 +458,8 @@ def dedup_incremental_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(jac >= JACCARD_THRESHOLD)
         .select("i", "j", F.round(jac, 4).cast("double").alias("jaccard"))
         .orderBy("i", "j")
-        # same unpersist-after-checkpoint discipline as
-        # dedup_minhash_lsh (round-13): the result is candidate-sized,
-        # the two caches were leaked per call before
-        .localCheckpoint(eager=True)
     )
-    docs.unpersist(blocking=False)
-    cand.unpersist(blocking=False)
-    return out
+    return out, docs, cand
 
 
 @query(

@@ -358,11 +358,27 @@ def test_incremental_lsh_no_cartesian_broadcast_verify(spark, sf_dir):
     cartesian/nested-loop anywhere (candidate generation is a bucket
     equi-join), and the exact-verification joins are broadcast (the
     candidate side is rare by LSH design) — the corpus never shuffles
-    for the verify stage."""
-    p = plan(spark, sf_dir, "dedup_incremental_lsh")
+    for the verify stage. Inspected through the _incremental_lsh_lazy
+    factoring: the public builder checkpoints its output, which
+    collapses the executed plan to a Scan ExistingRDD that has no join
+    nodes to check. That checkpoint (and the release of the builder's
+    caches it allows) is pinned by the last assertion, on the builder's
+    own plan."""
+    from flume_source_spark.pipeline.dedup import _incremental_lsh_lazy
+
+    lazy, docs, cand = _incremental_lsh_lazy(spark, sf_dir)
+    try:
+        lazy.collect()
+        p = lazy._jdf.queryExecution().executedPlan().toString()
+    finally:
+        docs.unpersist(blocking=False)
+        cand.unpersist(blocking=False)
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert "BroadcastHashJoin" in p
+    # the registered builder returns the checkpointed result
+    built = plan(spark, sf_dir, "dedup_incremental_lsh")
+    assert "Scan ExistingRDD" in built and "Join" not in built
 
 
 def test_knn_graph_blocked_plan_is_bounded(spark, sf_dir):
